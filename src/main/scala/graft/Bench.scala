@@ -344,8 +344,8 @@ object Bench {
     spark.conf.set("spark.graft.validation.cap.docs", "5000")
     spark.conf.set("spark.graft.validation.cap.vecs", "2000")
     // SPARK_GRAFT_CONF="k=v;k=v": extra session confs for measurement
-    // toggles (e.g. spark.graft.er.widen=false for the SCALE.md №20
-    // before/after). Applied last so a toggle can override the
+    // toggles (e.g. spark.graft.fasthash=false to time the md5 digest
+    // path). Applied last so a toggle can override the
     // defaults above; inherited by isolated-rerun children via the
     // ProcessBuilder's copied environment. The parsed overrides are
     // echoed into every emitted JSON line ("conf_overrides") so each

@@ -41,13 +41,6 @@ object GraftSession {
     // would interleave q44's DROP/delete/saveAsTable on the same paths
     .config("spark.sql.warehouse.dir", warehouseDir)
 
-  /** Apply engine configs to an already-constructed session (used when the
-    * driver harness owns the builder). Only dynamic confs can be set here. */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark
-  }
-
   def local(cores: Int = 4): SparkSession = {
     val s = configure(SparkSession.builder()
       .master(s"local[$cores]")

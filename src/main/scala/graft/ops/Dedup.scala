@@ -352,7 +352,7 @@ object Dedup {
   val d05 = Q("d05_simhash", simhashPairsSql(8)) { (s, d) =>
     // №27: the fingerprint pass is CPU-dense (64-bit token-vote simhash
     // per row) and rides the single-split scan at bench SFs — spread
-    // first (measured 2.0 cpu-s on ONE task by WidthProbe).
+    // first (measured 2.0 cpu-s on ONE task).
     val h = Width.spread(cappedDocs(s, d).select("doc_id", "text"))
       .select(col("doc_id"), simhashCol(s).as("h"))
     h.as("a").join(h.as("b"), col("a.doc_id") < col("b.doc_id"))
@@ -447,7 +447,7 @@ object Dedup {
     // d05's bench cap; d09's production threshold runs uncapped.
     // №27: the fingerprint pass is CPU-dense (64-bit token-vote simhash
     // per row) and rides the single-split scan at bench SFs — spread
-    // first (measured 2.0 cpu-s on ONE task by WidthProbe).
+    // first (measured 2.0 cpu-s on ONE task).
     val h = Width.spread(cappedDocs(s, d).select("doc_id", "text"))
       .select(col("doc_id"), simhashCol(s).as("h"))
     val blockKeys = (0 until 9).map { b =>

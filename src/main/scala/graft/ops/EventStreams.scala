@@ -613,7 +613,7 @@ object EventStreams {
     val cut = ev.agg(date_trunc("day", max(col("ts"))).as("cut"))
     // №27b: the user_id window chain is CPU-dense (3 windows + island
     // agg) but its ENSURE_REQUIREMENTS exchange carries ~2 MB at bench
-    // SFs, so AQE coalesces it to ONE task (WidthProbe: 2.75 cpu-s, all
+    // SFs, so AQE coalesces it to ONE task (measured 2.75 cpu-s, all
     // 1-task stages). Pin the window's own distribution with a
     // non-coalescible exchange — at scale this is the exact exchange
     // the window inserts anyway, so production pays nothing extra.

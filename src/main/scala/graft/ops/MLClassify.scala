@@ -124,7 +124,7 @@ object MLClassify {
     // №27: serving is embarrassingly parallel (keyword teacher scan +
     // HashingTF/IDF/LR transform per row) but rides the single-split
     // documents scan at bench SFs — measured 7.6 cpu-s on ONE task
-    // (WidthProbe, ml01). Spread the SERVING frame only; training
+    // (ml01 stage metrics). Spread the SERVING frame only; training
     // keeps the single partition per the fitModel measurement above.
     model.transform(labelledFrame(Width.spread(docs)))
       .withColumn("probs", vector_to_array(col("probability")))
@@ -1687,7 +1687,7 @@ object MLClassify {
     val (lab, full, quant, ctf, qtf) = fullQuantPicks(s, d)
     // r16: all six report scalars fold into ONE action — each former
     // `count()` was its own driver job (six sequential jobs, measured
-    // 48 jobs/4.3 s wall for 3.4 cpu-s by WidthProbe); the cross-joined
+    // 48 jobs/4.3 s wall for 3.4 cpu-s at r16); the cross-joined
     // 1-row aggs compute the identical integer report in one plan, and
     // the ppm divisions keep truncating-division semantics via DIV.
     lab.agg(count(lit(1)).as("n_docs"))

@@ -1744,8 +1744,8 @@ object Similarity {
     // checkpoint). Beam selection and the flag update share a single
     // window: rank the un-expanded rows per query, rows with rn ≤ B
     // are this hop's beam and flip to expanded (guide §1.2 step 1 —
-    // the hop loop was job-count-bound, not compute-bound; WidthProbe
-    // r16 measured 135 jobs for ~1.3 cpu-s).
+    // the hop loop was job-count-bound, not compute-bound; stage metrics
+    // at r16 counted 135 jobs for ~1.3 cpu-s).
     var pool = q.crossJoin(broadcast(entry))
       .select(col("query_id"), col("node"),
         expr("cosine_sim(q_emb, n_emb)").as("cos"),
@@ -1856,7 +1856,7 @@ object Similarity {
     // pruning reuses that broadcast to skip the untouched b= bucket
     // directories at runtime (in08's mechanism) — the coordinator
     // stays on executors and the former 2 collects + 3 checkpoints
-    // per hop (WidthProbe r16: 167 jobs/query) become one action.
+    // per hop (r16: 167 jobs/query) become one action.
     // pmod, not %: the index was written with pmod, and for a negative
     // vec_id % is negative — the probe would miss the partition and
     // silently return no rows (r12 ADVICE).

@@ -1988,7 +1988,7 @@ object TextAnalysis {
     * gate reads before trusting frequency-based heuristics (t02's
     * stopword ratios, t13's idf) on a new corpus.
     *
-    * №24 (round 16, the WindowWidthScan sweep): the engine side no
+    * №24 (round 16, the window-width sweep): the engine side no
     * longer ranks the vocab at all. Octave statistics are
     * TIE-INDEPENDENT — a frequency-c block of k types occupies the
     * contiguous rank interval [r0, r0+k) whatever the tie order, and

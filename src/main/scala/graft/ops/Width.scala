@@ -12,9 +12,9 @@ import org.apache.spark.sql.DataFrame
   * per-row digest packs (q60/q63's 4×md5), keyword-classify scans,
   * token/shingle explodes feeding partial aggregates, simhash
   * fingerprints, MLlib featurization — therefore serialises onto one
-  * core while the rest of the machine idles (measured catalog-wide by
-  * `graft.WidthProbe`: e.g. ml01 7.6 cpu-s / ml07 5.2 / d07 2.3, each
-  * 100% inside 1-task stages at sf0.1 on local[32]).
+  * core while the rest of the machine idles (measured catalog-wide from
+  * per-stage task metrics: e.g. ml01 7.6 cpu-s / ml07 5.2 / d07 2.3,
+  * each 100% inside 1-task stages at sf0.1 on local[32]).
   *
   * [[spread]] inserts a round-robin REPARTITION_BY_NUM exchange ONLY
   * when the input is narrower than the session's shuffle width. The
@@ -34,7 +34,7 @@ import org.apache.spark.sql.DataFrame
 object Width {
 
   /** The session's target width — `spark.sql.shuffle.partitions`, the
-    * same width [[EntityResolution]]'s maybeWiden and [[Dedup]]'s
+    * same width [[EntityResolution]]'s join-input widening and [[Dedup]]'s
     * verifyParallelism pin (bench/Verify set it to the core count). */
   private[ops] def target(df: DataFrame): Int =
     df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
@@ -44,15 +44,10 @@ object Width {
     * exchange in the plan at all — when the scan is already wide. */
   def spread(df: DataFrame): DataFrame = {
     // streaming frames cannot be probed (`.rdd` throws on a streaming
-    // source) and micro-batch width is the state-partition knob's job
-    // (№21) — pass them through untouched so batch/stream shared
+    // source) and micro-batch width is the stream's own shuffle
+    // width — pass them through untouched so batch/stream shared
     // helpers (e.g. Dedup.nearDupAdmission callers) stay stream-safe
     if (df.isStreaming) return df
-    // measurement toggle (the №20 `spark.graft.er.widen` precedent):
-    // `spark.graft.spread=false` restores every pre-spread plan so the
-    // before/after cost of the rule is measurable on demand
-    if (!df.sparkSession.conf.get("spark.graft.spread", "true").toBoolean)
-      return df
     val np = target(df)
     if (df.rdd.getNumPartitions < np) df.repartition(np) else df
   }

@@ -31,36 +31,6 @@ import graft.ops.NewsPipeline
   */
 object StreamOps {
 
-  /** State-partition knob — SCALE.md №21's measured lesson made
-    * executable (r15 verdict ask #5): state-store commit cost scales
-    * with the number of SHUFFLE PARTITIONS, not state volume (st01's
-    * window measured 3.4 k rows/s at 32 state partitions vs 9.5 k at
-    * 8 on the same box), so the engine default (partitions = cores)
-    * is wrong for small-state streams. Set this conf and every query
-    * started through the builders below pins its stateful shuffle
-    * width to it; Structured Streaming then freezes the value into
-    * the checkpoint at first start (`OffsetSeqMetadata`), so restarts
-    * keep it regardless of the session's batch setting. */
-  val StatePartitionsKey = "spark.graft.stream.statePartitions"
-
-  /** Starts a streaming query with `spark.sql.shuffle.partitions`
-    * overridden by [[StatePartitionsKey]] (when set) for the duration
-    * of the `.start()` call only — the started query's CLONED session
-    * captures the override (that is `DataStreamWriter.start`'s session
-    * -isolation contract), while the caller's batch session is
-    * restored immediately. `StreamingSpec` pins that the conf reaches
-    * the started plan's state operator. */
-  def startPinned(spark: SparkSession)(
-      start: => StreamingQuery): StreamingQuery =
-    spark.conf.getOption(StatePartitionsKey) match {
-      case Some(n) =>
-        val key = "spark.sql.shuffle.partitions"
-        val prev = spark.conf.get(key)
-        spark.conf.set(key, n)
-        try start finally spark.conf.set(key, prev)
-      case None => start
-    }
-
   case class Message(message: String, ts: Timestamp)
   case class UserEvent(user_id: Long, event_type: String, value: Double,
       ts: Timestamp)
@@ -135,13 +105,13 @@ object StreamOps {
       ckpt: String): StreamingQuery = {
     val s = events.sparkSession
     import s.implicits._
-    startPinned(s)(sessionCounts(events
+    sessionCounts(events
       .select(col("user_id"), col("event_type"), col("value"), col("ts"))
       .as[UserEvent]).writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", ckpt)
       .format("parquet").option("path", outDir)
-      .start())
+      .start()
   }
 
   /** Per-window top-k ranking stage of the trending operator — shared
@@ -186,11 +156,11 @@ object StreamOps {
     * the bar itself is the streaming aggregate). */
   def ohlcBarsStream(events: DataFrame, outDir: String,
       ckpt: String): StreamingQuery =
-    startPinned(events.sparkSession)(ohlcBars(events).writeStream
+    ohlcBars(events).writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", ckpt)
       .format("parquet").option("path", outDir)
-      .start())
+      .start()
 
   /** Daily distinct actives (DAU) — shared VERBATIM by the streaming
     * form and the st13 batch twin. The streaming plan CHAINS two
@@ -226,11 +196,11 @@ object StreamOps {
     * as the watermark closes each day. */
   def dailyActivesStream(events: DataFrame, outDir: String,
       ckpt: String): StreamingQuery =
-    startPinned(events.sparkSession)(dailyActives(events).writeStream
+    dailyActives(events).writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", ckpt)
       .format("parquet").option("path", outDir)
-      .start())
+      .start()
 
   /** Streaming Count-Min sketch maintenance — a different streaming
     * shape from every windowed/keyed aggregation above: a GLOBAL
@@ -244,11 +214,10 @@ object StreamOps {
     * [[graft.ops.TextAnalysis.cmsCells]] function. Expects a `token`
     * column. */
   def cmsCellsStream(tokens: DataFrame, queryName: String): StreamingQuery =
-    startPinned(tokens.sparkSession)(
-      graft.ops.TextAnalysis.cmsCells(tokens).writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory").queryName(queryName)
-        .start())
+    graft.ops.TextAnalysis.cmsCells(tokens).writeStream
+      .outputMode(OutputMode.Complete())
+      .format("memory").queryName(queryName)
+      .start()
 
   /** Streaming HLL maintenance — st14's bounded-state shape applied to
     * CARDINALITY: the state is the 256-register table of
@@ -261,11 +230,10 @@ object StreamOps {
     * Expects the named key column on `src`. */
   def hllRegistersStream(src: DataFrame, column: String,
       queryName: String): StreamingQuery =
-    startPinned(src.sparkSession)(
-      graft.ops.Relational.hllRegisters(src, column).writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory").queryName(queryName)
-        .start())
+    graft.ops.Relational.hllRegisters(src, column).writeStream
+      .outputMode(OutputMode.Complete())
+      .format("memory").queryName(queryName)
+      .start()
 
   /** Streaming histogram-quantile maintenance — the sketch trio's third
     * member (st14 CMS / st15 HLL / this): q19c's fixed-boundary value
@@ -274,11 +242,10 @@ object StreamOps {
     * the whole current sketch each trigger and any quantile is one walk
     * over the emitted table. Batch twin: `EventStreams.st16`. */
   def valueHistStream(src: DataFrame, queryName: String): StreamingQuery =
-    startPinned(src.sparkSession)(
-      graft.ops.EventStreams.valueHistCells(src).writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory").queryName(queryName)
-        .start())
+    graft.ops.EventStreams.valueHistCells(src).writeStream
+      .outputMode(OutputMode.Complete())
+      .format("memory").queryName(queryName)
+      .start()
 
   /** Streaming trending top-k — the dashboard query ("most frequent
     * event types per hour, live"). Ranking inside a streaming
@@ -292,13 +259,13 @@ object StreamOps {
     * separated by the partitionBy). */
   def trendingTopKStream(events: Dataset[UserEvent], k: Int,
       outDir: String, ckpt: String): StreamingQuery =
-    startPinned(events.sparkSession)(windowedCounts(events).writeStream
+    windowedCounts(events).writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", ckpt)
       .foreachBatch { (df: DataFrame, _: Long) =>
         trendingTopK(df, k).write.mode("append").parquet(outDir): Unit
       }
-      .start())
+      .start()
 
   /** Custom state: running per-user totals via `mapGroupsWithState` —
     * the engine's `KeyValueGroupedDataset` stateful surface (the [EXT]
@@ -326,7 +293,19 @@ object StreamOps {
     * stream joinable at all. Equi-key (user_id) + time-range condition →
     * state shuffles on user_id. */
   def clicksBeforePurchase(clicks: Dataset[UserEvent],
-      purchases: Dataset[UserEvent]): DataFrame = {
+      purchases: Dataset[UserEvent]): DataFrame =
+    intervalJoin(clicks, purchases, "inner")
+      .select(col("p_user").as("user_id"), col("purchase_ts"),
+        col("click_ts"), col("purchase_value"), col("click_value"))
+
+  /** The interval join every click/purchase mode shares: both sides
+    * watermarked at 10 minutes, a purchase (p_user, purchase_ts,
+    * purchase_value) matching the same user's clicks (c_user,
+    * click_ts, click_value) in the 10 minutes up to it. The time bound
+    * references both event times, which Spark requires of outer
+    * stream-stream joins and which bounds the click state. */
+  private def intervalJoin(clicks: Dataset[UserEvent],
+      purchases: Dataset[UserEvent], joinType: String): DataFrame = {
     val c = clicks.toDF().withWatermark("ts", "10 minutes")
       .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
         col("value").as("click_value"))
@@ -336,9 +315,7 @@ object StreamOps {
     p.join(c,
       col("p_user") === col("c_user") &&
         col("click_ts") >= col("purchase_ts") - expr("INTERVAL 10 MINUTES") &&
-        col("click_ts") <= col("purchase_ts"))
-      .select(col("p_user").as("user_id"), col("purchase_ts"),
-        col("click_ts"), col("purchase_value"), col("click_value"))
+        col("click_ts") <= col("purchase_ts"), joinType)
   }
 
   /** Streaming LAST-TOUCH attribution — the join→AGGREGATION
@@ -395,12 +372,11 @@ object StreamOps {
     def side(t: String) = events.filter(col("event_type") === t)
       .select(col("user_id"), col("event_type"), col("value"), col("ts"))
       .as[UserEvent]
-    startPinned(events.sparkSession)(
-      clicksBeforePurchase(side("click"), side("purchase")).writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .format("parquet").option("path", outDir)
-        .start())
+    clicksBeforePurchase(side("click"), side("purchase")).writeStream
+      .outputMode(OutputMode.Append())
+      .option("checkpointLocation", ckpt)
+      .format("parquet").option("path", outDir)
+      .start()
   }
 
   /** Streaming exact dedup — the streaming twin of the d01 batch op:
@@ -418,13 +394,6 @@ object StreamOps {
       .withWatermark("ts", "10 minutes")
       .dropDuplicatesWithinWatermark("fp")
 
-  /** LEFT OUTER variant of the interval join: purchases with no click in
-    * the window still emit — but only once the watermark passes the end
-    * of their join window, because until then a matching click could
-    * still arrive. That deferred null-emission is the semantic
-    * difference between batch and stream outer joins, and why both
-    * watermarks are mandatory here (inner-join state bounds aside, the
-    * outer side cannot emit at all without a horizon). */
   /** LEFT SEMI variant — "which purchases had a prior click", each
     * purchase emitted ONCE regardless of click count (the existence
     * test as a streaming join; with inner/left/full this completes the
@@ -432,19 +401,10 @@ object StreamOps {
     * bound, so click state evicts identically; the semi join emits the
     * LEFT row only and buffers no click payload into results. */
   def purchasesWithPriorClick(clicks: Dataset[UserEvent],
-      purchases: Dataset[UserEvent]): DataFrame = {
-    val c = clicks.toDF().withWatermark("ts", "10 minutes")
-      .select(col("user_id").as("c_user"), col("ts").as("click_ts"))
-    val p = purchases.toDF().withWatermark("ts", "10 minutes")
-      .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
-        col("value").as("purchase_value"))
-    p.join(c,
-      col("p_user") === col("c_user") &&
-        col("click_ts") >= col("purchase_ts") - expr("INTERVAL 10 MINUTES") &&
-        col("click_ts") <= col("purchase_ts"), "left_semi")
+      purchases: Dataset[UserEvent]): DataFrame =
+    intervalJoin(clicks, purchases, "left_semi")
       .select(col("p_user").as("user_id"), col("purchase_ts"),
         col("purchase_value"))
-  }
 
   /** LEFT ANTI variant — "which purchases had NO prior click" (the
     * abandonment/anomaly test; with inner/outer/semi this closes the
@@ -464,22 +424,18 @@ object StreamOps {
       .filter(col("click_ts").isNull)
       .select(col("user_id"), col("purchase_ts"), col("purchase_value"))
 
+  /** LEFT OUTER variant of the interval join: purchases with no click in
+    * the window still emit — but only once the watermark passes the end
+    * of their join window, because until then a matching click could
+    * still arrive. That deferred null-emission is the semantic
+    * difference between batch and stream outer joins, and why both
+    * watermarks are mandatory here (inner-join state bounds aside, the
+    * outer side cannot emit at all without a horizon). */
   def clicksBeforePurchaseOuter(clicks: Dataset[UserEvent],
-      purchases: Dataset[UserEvent]): DataFrame = {
-    val c = clicks.toDF().withWatermark("ts", "10 minutes")
-      .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
-        col("value").as("click_value"))
-    val p = purchases.toDF().withWatermark("ts", "10 minutes")
-      .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
-        col("value").as("purchase_value"))
-    p.join(c,
-      col("p_user") === col("c_user") &&
-        col("click_ts") >= col("purchase_ts") - expr("INTERVAL 10 MINUTES") &&
-        col("click_ts") <= col("purchase_ts"),
-      "left_outer")
+      purchases: Dataset[UserEvent]): DataFrame =
+    intervalJoin(clicks, purchases, "left_outer")
       .select(col("p_user").as("user_id"), col("purchase_ts"),
         col("click_ts"), col("purchase_value"), col("click_value"))
-  }
 
   /** FULL OUTER stream-stream interval join — both unmatched purchases
     * AND unmatched clicks survive (a left-outer keeps only the former,
@@ -489,22 +445,11 @@ object StreamOps {
     * The join condition must reference both event times or Spark
     * rejects the outer stream-stream join at analysis. */
   def clicksPurchasesFullOuter(clicks: Dataset[UserEvent],
-      purchases: Dataset[UserEvent]): DataFrame = {
-    val c = clicks.toDF().withWatermark("ts", "10 minutes")
-      .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
-        col("value").as("click_value"))
-    val p = purchases.toDF().withWatermark("ts", "10 minutes")
-      .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
-        col("value").as("purchase_value"))
-    p.join(c,
-      col("p_user") === col("c_user") &&
-        col("click_ts") >= col("purchase_ts") - expr("INTERVAL 10 MINUTES") &&
-        col("click_ts") <= col("purchase_ts"),
-      "full_outer")
+      purchases: Dataset[UserEvent]): DataFrame =
+    intervalJoin(clicks, purchases, "full_outer")
       .select(coalesce(col("p_user"), col("c_user")).as("user_id"),
         col("purchase_ts"), col("click_ts"),
         col("purchase_value"), col("click_value"))
-  }
 
   case class ChangeEvent(user_id: Long, event_id: Long, event_type: String,
       value: Double, ts: Timestamp)
@@ -702,7 +647,7 @@ object StreamOps {
     * is idempotent under checkpoint recovery at the batch level. */
   def persistClassified(classified: DataFrame, outDir: String,
       checkpointDir: String): StreamingQuery =
-    startPinned(classified.sparkSession)(classified.writeStream
+    classified.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -711,5 +656,5 @@ object StreamOps {
           .write.mode("append").partitionBy("category").parquet(outDir)
       }
       .trigger(Trigger.AvailableNow())
-      .start())
+      .start()
 }

@@ -508,7 +508,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(plan.contains("HashJoin") || plan.contains("SortMergeJoin"),
       plan.take(1500))
     // the №20 v2 comparator-width claim: the join INPUTS are exchanged
-    // (maybeWiden), so the join + DP + filter stage is
+    // (EntityResolution.widen), so the join + DP + filter stage is
     // shuffle-partitions wide and nothing pair-sized crosses a shuffle
     // (ParallelismAuditSpec proves the stage-width structure; this
     // pins that the explicit input exchanges are present at all)
